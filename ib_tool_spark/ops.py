@@ -3,14 +3,16 @@
 Each operator re-expresses one reference primitive (SURVEY.md §2) as a
 declarative Spark plan: candidate generation by cell equi-join (which
 Catalyst plans as a broadcast hash join — the polygon/center side is
-always tiny relative to the image table), then an exact vectorized
-numpy refine only where the candidate cell is ambiguous.
+always tiny relative to the image table), then an exact refine only
+where the candidate cell is ambiguous.
 
 Scale notes (the 100 TB contract):
 - The image side NEVER shuffles in pip_join/knn_assign — the build side
-  is broadcast, so the plan is scan → project (codegen) → broadcast
-  join → Arrow-batched refine.  Throughput scales linearly with
-  executors; there is no shuffle to skew.
+  is broadcast, with its per-cell edges/candidates laid out as
+  fixed-width slots, so the plan is scan → project (codegen) →
+  broadcast join → straight-line Column refine, all in whole-stage
+  codegen.  Throughput scales linearly with executors; there is no
+  shuffle to skew.
 - density_grid aggregates before its (tiny) k-ring self-join: the
   shuffle moves one row per *occupied cell*, not per point, and Spark's
   partial aggregation does the per-point work map-side.
@@ -20,6 +22,7 @@ Scale notes (the 100 TB contract):
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import numpy as np
@@ -29,8 +32,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import synth
-from .cells import DEFAULT_GRID, GridConfig, encode_col, k_ring_offsets, parent_col
-from .geom import cover_cells, points_in_polygon, rings_bbox
+from .cells import (
+    DEFAULT_GRID,
+    MAX_RES,
+    GridConfig,
+    encode_col,
+    encode_colrow,
+    k_ring_offsets,
+    parent_col,
+    xy_to_colrow,
+)
+from .geom import cover_cells
 
 # ---------------------------------------------------------------------------
 # Column-level stages (pure built-ins → whole-stage codegen)
@@ -144,17 +156,17 @@ _COVER_CACHE: dict = {}
 _COVER_CACHE_MAX = 8
 # knn candidate relation cache (same bound/eviction as the cover cache)
 _KNN_CAND_CACHE: dict = {}
-# deepest per-cell candidate list that still uses the fixed-width
-# (codegen least-chain) layout; deeper lists fall back to array+fold
-_KNN_WIDE_MAX = 8
+# widest pruned per-cell candidate list the kNN least() chain takes; a
+# wider one steps knn_assign to the next finer resolution, as long as
+# that step's unpruned (center, cell) pairs stay within _KNN_MAX_PAIRS
+_KNN_MAX_SLOTS = 64
+_KNN_MAX_PAIRS = 1 << 21
 
 
 def _polygons_digest(polygons) -> str:
     """Content digest of a polygon set (sid + ring coordinates).  Used
     as the cover-cache key: id()-based keys can silently alias after
     garbage collection reuses an address."""
-    import hashlib
-
     h = hashlib.sha1()
     for sid, _name, rings in polygons:
         h.update(str(int(sid)).encode())
@@ -163,66 +175,92 @@ def _polygons_digest(polygons) -> str:
     return h.hexdigest()
 
 
-def _cover_with_edges_pdf(polygons, res, grid) -> pd.DataFrame:
-    """Broadcast build side for the SQL refine: per covering cell its
-    class, center, center parity, and the edges overlapping the cell."""
+def _runs(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Start and length of every run of equal values in a sorted array."""
+    if keys.shape[0] == 0:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    return starts, np.diff(np.r_[starts, keys.shape[0]])
+
+
+def _slot_frame(
+    spark: SparkSession,
+    head: dict[str, np.ndarray],
+    flat: dict[str, np.ndarray],
+    lens: np.ndarray,
+    width: int,
+) -> DataFrame:
+    """One row per key with ``width`` fixed null-padded slots.  ``head``
+    holds one value per row; ``flat`` maps a slot name pattern with
+    ``{j}`` to the values of all rows back to back, ``lens[i]`` of them
+    for row i.  Built as a typed Arrow table, so int64 stays bigint and
+    an empty slot is a real null under every Arrow session setting (a
+    pandas frame padded with None promotes int64 to float64, and NaN is
+    a null only when Arrow converts it)."""
+    import pyarrow as pa
+
+    row = np.repeat(np.arange(lens.shape[0]), lens)
+    slot = np.arange(row.shape[0]) - np.repeat(np.cumsum(lens) - lens, lens)
+    empty = np.arange(width)[None, :] >= lens[:, None]
+    cols = {n: pa.array(v) for n, v in head.items()}
+    for pat, v in flat.items():
+        a = np.zeros((lens.shape[0], width), dtype=v.dtype)
+        a[row, slot] = v
+        cols.update({pat.format(j=j): pa.array(a[:, j], mask=empty[:, j]) for j in range(width)})
+    return spark.createDataFrame(pa.table(cols))
+
+
+_EDGE_SLOTS = ("e{j}x1", "e{j}y1", "e{j}x2", "e{j}y2")
+
+
+def _cover_slots_frame(spark: SparkSession, polygons, res, grid) -> tuple[DataFrame, int]:
+    """Broadcast build side for the PIP refine: per covering cell its
+    sid, class, center, center parity, and the polygon edges overlapping
+    the cell as fixed-width null-padded slots ``e{j}x1, e{j}y1, e{j}x2,
+    e{j}y2``.  The width is the largest edge count of any cover cell."""
     from .geom import cover_cells_with_edges
 
-    rows = {"cell": [], "sid": [], "full": [], "cpx": [], "cpy": [], "cpar": [], "edges": []}
+    head = {"cell": [], "sid": [], "full": [], "cpx": [], "cpy": [], "cpar": []}
+    edge_lists = []
     for sid, _name, rings in polygons:
-        cells, full, cpx, cpy, cpar, edge_lists = cover_cells_with_edges(rings, res, grid)
-        rows["cell"].append(cells)
-        rows["sid"].append(np.full(cells.shape[0], sid, dtype=np.int64))
-        rows["full"].append(full)
-        rows["cpx"].append(cpx)
-        rows["cpy"].append(cpy)
-        rows["cpar"].append(cpar)
-        rows["edges"].extend([e.tolist() for e in edge_lists])
-    return pd.DataFrame(
-        {
-            "cell": np.concatenate(rows["cell"]),
-            "sid": np.concatenate(rows["sid"]),
-            "full": np.concatenate(rows["full"]),
-            "cpx": np.concatenate(rows["cpx"]),
-            "cpy": np.concatenate(rows["cpy"]),
-            "cpar": np.concatenate(rows["cpar"]),
-            "edges": rows["edges"],
-        }
-    )
+        cells, full, cpx, cpy, cpar, edges = cover_cells_with_edges(rings, res, grid)
+        sids = np.full(cells.shape[0], sid, dtype=np.int64)
+        for k, v in zip(head, (cells, sids, full, cpx, cpy, cpar)):
+            head[k].append(v)
+        edge_lists.extend(edges)
+    lens = np.array([e.shape[0] for e in edge_lists], dtype=np.int64)
+    edges = np.concatenate(edge_lists) if edge_lists else np.empty((0, 4))
+    width = int(lens.max(initial=0))
+    flat = {pat: edges[:, k] for k, pat in enumerate(_EDGE_SLOTS)}
+    frame = _slot_frame(spark, {k: np.concatenate(v) for k, v in head.items()}, flat, lens, width)
+    return frame, width
 
 
-_COVER_EDGES_SCHEMA = (
-    "cell long, sid long, full boolean, cpx double, cpy double, cpar boolean, "
-    "edges array<array<double>>"
-)
-
-
-def _sql_inside_expr():
+def _sql_inside_expr(width: int):
     """Pure-Column even-odd refine: inside ⇔ cpar XOR (segment from the
     point to the cell center properly crosses an odd number of the
     cell's local edges).  Equivalent to ray crossing for points in
-    general position; zero Python, stays inside whole-stage codegen.
+    general position.  Straight-line math over the ``width`` edge slots
+    (an empty slot never crosses), so the refine stays inside
+    whole-stage codegen; interior (``full``) cells skip it.
 
     Degenerate-input caveat: only PROPER crossings count (strict
     inequalities), so a point exactly on a polygon edge, or whose
     point-to-center segment passes through a polygon vertex, can
-    classify differently from refine='pandas' (points_in_polygon's
-    half-open-in-y rule).  Exact-parity gates over grid-aligned inputs
-    must either use refine='pandas' on both sides or keep test points
-    off polygon boundaries — the synth scene guarantees the latter.
+    classify differently from ``geom.points_in_polygon``'s
+    half-open-in-y rule.  Exact-parity gates must keep test points off
+    polygon boundaries — the synth scene guarantees that.
     """
     x, y, cpx, cpy = F.col("x"), F.col("y"), F.col("cpx"), F.col("cpy")
-
-    def crosses(e):
-        ex1, ey1, ex2, ey2 = e[0], e[1], e[2], e[3]
+    odd = F.lit(False)
+    for j in range(width):
+        ex1, ey1, ex2, ey2 = (F.col(pat.format(j=j)) for pat in _EDGE_SLOTS)
         o1 = (cpx - x) * (ey1 - y) - (cpy - y) * (ex1 - x)
         o2 = (cpx - x) * (ey2 - y) - (cpy - y) * (ex2 - x)
         o3 = (ex2 - ex1) * (y - ey1) - (ey2 - ey1) * (x - ex1)
         o4 = (ex2 - ex1) * (cpy - ey1) - (ey2 - ey1) * (cpx - ex1)
-        return ((o1 > 0) != (o2 > 0)) & ((o3 > 0) != (o4 > 0))
-
-    n_cross = F.size(F.filter(F.col("edges"), crosses))
-    odd = n_cross % 2 == 1
+        crosses = F.coalesce(((o1 > 0) != (o2 > 0)) & ((o3 > 0) != (o4 > 0)), F.lit(False))
+        odd = crosses if j == 0 else odd != crosses
     return F.when(F.col("full"), F.lit(True)).otherwise(F.col("cpar") != odd)
 
 
@@ -232,89 +270,41 @@ def pip_join(
     res: int = 10,
     grid: GridConfig = DEFAULT_GRID,
     how: str = "inner",
-    refine: str = "sql",
 ) -> DataFrame:
     """Point-in-polygon join: points(x, y, cell) × polygons → + sid.
 
     Plan shape: broadcast-hash-join on the cell key (no shuffle of the
-    point side), then an exact even-odd refine for boundary-cell rows.
-    Replaces arcpy SpatialJoin/SelectLayerByLocation (IB-Tool2.py:882,
-    670 …).
-
-    ``refine='sql'`` (default): segment-parity test in pure Column math
-    — the whole join stays in whole-stage codegen, no Python workers.
-    ``refine='pandas'``: vectorized numpy ray-crossing in an Arrow
-    batch UDF (the fallback path; also the cross-check in tests).
+    point side), then an exact even-odd refine for boundary-cell rows
+    in pure Column math (``_sql_inside_expr``) — the whole join stays
+    in whole-stage codegen, no Python workers.  Replaces arcpy
+    SpatialJoin/SelectLayerByLocation (IB-Tool2.py:882, 670 …).
 
     ``how='inner'`` keeps matching rows; ``how='anti'`` returns points
     matching NO polygon (INVERT selections, IB-Tool2.py:818-823).
     """
     spark = points.sparkSession
-    ckey = (_polygons_digest(polygons), res, grid, refine, id(spark))
-    if ckey in _COVER_CACHE:
-        cover, bc = _COVER_CACHE[ckey]
-    else:
+    ckey = (_polygons_digest(polygons), res, grid, id(spark))
+    if ckey not in _COVER_CACHE:
         while len(_COVER_CACHE) >= _COVER_CACHE_MAX:
-            _old_key = next(iter(_COVER_CACHE))
-            _old_cover, _old_bc = _COVER_CACHE.pop(_old_key)
-            for _h in (_old_cover, _old_bc):
-                if _h is not None:
-                    try:
-                        _h.unpersist()
-                    except Exception:
-                        pass
-        if refine == "sql":
-            # persist: the BroadcastExchange is rebuilt per JOB, and
-            # feeding it from cached blocks instead of re-serializing
-            # the driver-local relation saves ~0.15 s per run (measured
-            # at 12 cores) — a per-job fixed cost, so it matters most
-            # for short jobs and small-cluster scaling legs
-            cover = spark.createDataFrame(
-                _cover_with_edges_pdf(polygons, res, grid), _COVER_EDGES_SCHEMA
-            ).persist()
-            bc = None
-        else:
-            cover = spark.createDataFrame(
-                polygon_cover_pdf(polygons, res, grid), "cell long, sid long, full boolean"
-            )
-            rings_by_sid = {
-                sid: [np.asarray(r, dtype=np.float64) for r in rings]
-                for sid, _n, rings in polygons
-            }
-            bc = spark.sparkContext.broadcast(rings_by_sid)
-        _COVER_CACHE[ckey] = (cover, bc)
+            _old, _ = _COVER_CACHE.pop(next(iter(_COVER_CACHE)))
+            try:
+                _old.unpersist()
+            except Exception:
+                pass
+        # persist: the BroadcastExchange is rebuilt per JOB, and
+        # feeding it from cached blocks instead of re-serializing the
+        # local relation saves ~0.15 s per run (measured at 12
+        # cores) — a per-job fixed cost, so it matters most for short
+        # jobs and small-cluster scaling legs
+        frame, width = _cover_slots_frame(spark, polygons, res, grid)
+        _COVER_CACHE[ckey] = (frame.persist(), width)
+    cover, width = _COVER_CACHE[ckey]
 
-    joined = points.join(F.broadcast(cover), "cell", "inner")
-
-    if refine == "sql":
-        matched = (
-            joined.withColumn("__inside", _sql_inside_expr())
-            .filter(F.col("__inside"))
-            .drop("__inside", "full", "cpx", "cpy", "cpar", "edges")
-        )
-    else:
-
-        @F.pandas_udf(T.BooleanType())
-        def refine_udf(x: pd.Series, y: pd.Series, sid: pd.Series, full: pd.Series) -> pd.Series:
-            out = full.to_numpy(dtype=bool, na_value=False).copy()
-            todo = ~out
-            if todo.any():
-                xs = x.to_numpy(dtype=np.float64)
-                ys = y.to_numpy(dtype=np.float64)
-                sids = sid.to_numpy(dtype=np.int64)
-                polys = bc.value
-                for s in np.unique(sids[todo]):
-                    m = todo & (sids == s)
-                    out[m] = points_in_polygon(xs[m], ys[m], polys[int(s)])
-            return pd.Series(out)
-
-        matched = (
-            joined.withColumn(
-                "__inside", refine_udf(F.col("x"), F.col("y"), F.col("sid"), F.col("full"))
-            )
-            .filter(F.col("__inside"))
-            .drop("__inside", "full")
-        )
+    matched = (
+        points.join(F.broadcast(cover), "cell", "inner")
+        .filter(_sql_inside_expr(width))
+        .drop("full", "cpx", "cpy", "cpar", *[p.format(j=j) for j in range(width) for p in _EDGE_SLOTS])
+    )
     if how == "inner":
         return matched
     if how == "anti":
@@ -327,6 +317,62 @@ def pip_join(
 # ---------------------------------------------------------------------------
 
 
+def _knn_candidates(cid, cx, cy, cutoff: float, res: int, grid: GridConfig):
+    """Pruned candidate centers of every cell at ``res``, sorted by
+    (cell, center_id): (cell, cid, cx, cy) per candidate.
+
+    Of centers at identical coordinates only the lowest id is kept.
+    Each center is exploded to the square k-ring of cells that covers
+    its cutoff disk, then pruned exactly and conservatively against the
+    cell rectangle (grown by a float slack ``tol``; border cells reach
+    to infinity, because encode clips outside points into them):
+    - a center whose cutoff disk misses the rectangle can never pass
+      the cutoff filter;
+    - a center whose minimum distance to the rectangle exceeds another
+      candidate's maximum distance to it is strictly farther than that
+      candidate from every point of the cell, so it can never win.
+    The slack only ever keeps extra candidates, so the (d2, center_id)
+    winner of every point is unchanged.
+    """
+    # coincident centers: the lowest id wins every tie, so keep only it
+    order = np.lexsort((cid, cy, cx))
+    cid, cx, cy = cid[order], cx[order], cy[order]
+    first = np.r_[True, (cx[1:] != cx[:-1]) | (cy[1:] != cy[:-1])]
+    cid, cx, cy = cid[first], cx[first], cy[first]
+
+    cs = grid.cell_size(res)
+    n = 1 << res
+    offs = k_ring_offsets(int(np.ceil(cutoff / cs)))
+    ix, iy = xy_to_colrow(cx, cy, res, grid)
+    reps = offs.shape[0]
+    cix = (ix[:, None] + offs[None, :, 0]).ravel()
+    ciy = (iy[:, None] + offs[None, :, 1]).ravel()
+    src = np.repeat(np.arange(cid.shape[0]), reps)
+    ok = (cix >= 0) & (cix < n) & (ciy >= 0) & (ciy < n)
+    cix, ciy, src = cix[ok], ciy[ok], src[ok]
+
+    tol = 1e-9 * (grid.extent + abs(grid.x0) + abs(grid.y0))
+    lo_x = np.where(cix == 0, -np.inf, grid.x0 + cix * cs - tol)
+    hi_x = np.where(cix == n - 1, np.inf, grid.x0 + (cix + 1) * cs + tol)
+    lo_y = np.where(ciy == 0, -np.inf, grid.y0 + ciy * cs - tol)
+    hi_y = np.where(ciy == n - 1, np.inf, grid.y0 + (ciy + 1) * cs + tol)
+    px, py = cx[src], cy[src]
+    mind = np.hypot(np.maximum(np.maximum(lo_x - px, px - hi_x), 0.0),
+                    np.maximum(np.maximum(lo_y - py, py - hi_y), 0.0))
+    maxd = np.hypot(np.maximum(px - lo_x, hi_x - px), np.maximum(py - lo_y, hi_y - py))
+    keep = mind <= cutoff + tol
+    cell = encode_colrow(cix[keep], ciy[keep], res)
+    src, mind, maxd = src[keep], mind[keep], maxd[keep]
+
+    order = np.lexsort((cid[src], cell))
+    cell, src, mind, maxd = cell[order], src[order], mind[order], maxd[order]
+    starts, lens = _runs(cell)
+    if cell.shape[0]:
+        keep = mind <= np.repeat(np.minimum.reduceat(maxd, starts), lens) + tol
+        cell, src = cell[keep], src[keep]
+    return cell, cid[src], cx[src], cy[src]
+
+
 def knn_assign(
     points: DataFrame,
     centers: pd.DataFrame,  # columns: center_id, cx, cy
@@ -336,10 +382,12 @@ def knn_assign(
 ) -> DataFrame:
     """Nearest center within ``cutoff`` for every point — fully JVM-side.
 
-    Candidate generation: each center is exploded to the square k-ring
-    of cells that covers its cutoff disk; points join on their own cell
-    (broadcast), distances are plain column math, and ``min_by`` picks
-    the winner.  No Python in the loop at all.  Mirrors the reference's
+    Candidate generation: each center is exploded to the k-ring of cells
+    that covers its cutoff disk and pruned per cell in numpy at plan-build
+    time (``_knn_candidates``); points join their own cell (broadcast),
+    distances are plain column math, and the lexicographic (d2,
+    center_id) minimum picks the winner, so ties go to the lower id.
+    No Python in the loop at all.  Mirrors the reference's
     GenerateNearTable CLOSEST with a 70 m cutoff (IB-Tool2.py:1985-96).
     """
     spark = points.sparkSession
@@ -348,147 +396,72 @@ def knn_assign(
         res = 1
         while grid.cell_size(res + 1) >= cutoff and res < 20:
             res += 1
-    cs = grid.cell_size(res)
-    k = int(np.ceil(cutoff / cs))
-    offs = k_ring_offsets(k)
-    from .cells import encode, xy_to_colrow, encode_colrow
-
+    cid = centers["center_id"].to_numpy(np.int64)
     cxy = centers[["cx", "cy"]].to_numpy(dtype=np.float64)
-    ix, iy = xy_to_colrow(cxy[:, 0], cxy[:, 1], res, grid)
-    n = 1 << res
-    reps = offs.shape[0]
-    cand_ix = np.repeat(ix, reps) + np.tile(offs[:, 0], len(ix))
-    cand_iy = np.repeat(iy, reps) + np.tile(offs[:, 1], len(iy))
-    ok = (cand_ix >= 0) & (cand_ix < n) & (cand_iy >= 0) & (cand_iy < n)
-    cand = pd.DataFrame(
-        {
-            "cell": encode_colrow(cand_ix[ok], cand_iy[ok], res),
-            "center_id": np.repeat(centers["center_id"].to_numpy(np.int64), reps)[ok],
-            "cx": np.repeat(cxy[:, 0], reps)[ok],
-            "cy": np.repeat(cxy[:, 1], reps)[ok],
-        }
-    )
-    # ZERO-SHUFFLE shape (VERDICT round-1 wrong#8): the broadcast side
-    # carries ONE row per cell with the candidate centers, so each
-    # point joins exactly one row and the argmin runs in pure Column
-    # math — no groupBy, no Exchange on the point side at all.
-    #
-    # Two physical layouts for the per-cell candidates (r6): when the
-    # deepest cell holds ≤ _KNN_WIDE_MAX centers the candidates are laid
-    # out as FIXED WIDTH columns (cid0/cx0/cy0, …) and the argmin is a
-    # least() chain over codegen'd structs — higher-order array
-    # functions (transform/array_min) are interpreted per row, and the
-    # wide form measured 1.53 → 1.11 s on the 6M-point sf1.0 gate with
-    # exceptAll parity 0 (plans/r06).  Deeper candidate lists (many
-    # overlapping center disks) keep the array+fold form.
-    #
-    # persist behind the broadcast, keyed by (centers, cutoff, res):
-    # like the PIP cover, the BroadcastExchange rebuilds per job and
-    # feeding it from cached blocks skips re-serializing the
-    # driver-local candidate relation on every run (bounded LRU)
     # content-digest key (not the salted built-in hash()): a hash()
     # collision between two different center sets would silently return
     # the wrong persisted candidate relation — same reasoning as the
     # cover cache's sha1 digest (ADVICE r5)
-    import hashlib as _hashlib
-
-    _ckey_h = _hashlib.sha1()
-    _ckey_h.update(centers["center_id"].to_numpy(np.int64).tobytes())
-    _ckey_h.update(cxy.tobytes())
-    ckey = (
-        _ckey_h.hexdigest(),
-        float(cutoff),
-        res,
-        grid,
-        id(spark),
-    )
-    width = int(cand.groupby("cell").size().max()) if len(cand) else 0
-    wide = 0 < width <= _KNN_WIDE_MAX
-    cached = _KNN_CAND_CACHE.get(ckey)
-    if cached is None:
+    h = hashlib.sha1()
+    h.update(cid.tobytes())
+    h.update(cxy.tobytes())
+    ckey = (h.hexdigest(), float(cutoff), res, grid, id(spark))
+    if ckey not in _KNN_CAND_CACHE:
         while len(_KNN_CAND_CACHE) >= _COVER_CACHE_MAX:
-            _old = _KNN_CAND_CACHE.pop(next(iter(_KNN_CAND_CACHE)))
+            _old = _KNN_CAND_CACHE.pop(next(iter(_KNN_CAND_CACHE)))[0]
             try:
                 _old.unpersist()
             except Exception:
                 pass
-        if wide:
-            rows = []
-            for cell, g in cand.groupby("cell"):
-                row = {"cell": int(cell)}
-                for j, r in enumerate(g.itertuples()):
-                    row[f"cid{j}"] = int(r.center_id)
-                    row[f"cx{j}"] = float(r.cx)
-                    row[f"cy{j}"] = float(r.cy)
-                for j in range(len(g), width):
-                    row[f"cid{j}"] = None
-                    row[f"cx{j}"] = None
-                    row[f"cy{j}"] = None
-                rows.append(row)
-            schema = "cell long, " + ", ".join(
-                f"cid{j} long, cx{j} double, cy{j} double" for j in range(width)
-            )
-            cached = spark.createDataFrame(pd.DataFrame(rows), schema).persist()
-        else:
-            grouped = [
-                (
-                    int(cell),
-                    [
-                        {"center_id": int(r.center_id), "cx": float(r.cx), "cy": float(r.cy)}
-                        for r in g.itertuples()
-                    ],
-                )
-                for cell, g in cand.groupby("cell")
-            ]
-            cached = spark.createDataFrame(
-                grouped, "cell long, cands array<struct<center_id: long, cx: double, cy: double>>"
-            ).persist()
-        _KNN_CAND_CACHE[ckey] = cached
-    cand_df = cached
+        # ZERO-SHUFFLE shape (VERDICT round-1 wrong#8): the broadcast
+        # side carries ONE row per cell with its pruned candidates laid
+        # out as fixed-width null-padded slots (cid{j}, cx{j}, cy{j}),
+        # so each point joins exactly one row and the argmin is a
+        # least() chain in codegen — no groupBy, no Exchange, and no
+        # interpreted higher-order function.  The width is taken from
+        # the data; a pruned list wider than _KNN_MAX_SLOTS steps to
+        # the next finer resolution, where the prune cuts deeper.
+        coarsest = None
+        while True:
+            cand = _knn_candidates(cid, cxy[:, 0], cxy[:, 1], float(cutoff), res, grid)
+            starts, lens = _runs(cand[0])
+            coarsest = coarsest or (res, cand, starts, lens)
+            if lens.max(initial=0) <= _KNN_MAX_SLOTS:
+                break
+            k_finer = int(np.ceil(cutoff / grid.cell_size(res + 1)))
+            if res >= MAX_RES or cid.shape[0] * (2 * k_finer + 1) ** 2 > _KNN_MAX_PAIRS:
+                # no resolution within the pair bound fits (e.g. many
+                # centers equidistant from one spot): the coarsest
+                # layout has the fewest cells
+                res, cand, starts, lens = coarsest
+                break
+            res += 1
+        width = int(lens.max(initial=1))
+        flat = dict(zip(("cid{j}", "cx{j}", "cy{j}"), cand[1:]))
+        # persist behind the broadcast, like the PIP cover: the
+        # BroadcastExchange rebuilds per job, and feeding it from cached
+        # blocks skips re-serializing the local relation
+        frame = _slot_frame(spark, {"cell": cand[0][starts]}, flat, lens, width).persist()
+        _KNN_CAND_CACHE[ckey] = (frame, res, width)
+    cand_df, res, width = _KNN_CAND_CACHE[ckey]
     pts = points.withColumn("__kcell", encode_col(F.col("x"), F.col("y"), res, grid))
     joined = pts.join(F.broadcast(cand_df), pts["__kcell"] == cand_df["cell"], "inner").drop(
         cand_df["cell"]
     )
 
     x, y = F.col("x"), F.col("y")
-
-    if wide:
-        # least() over fixed-slot structs: same lexicographic (d2,
-        # center_id) winner rule; empty slots carry a +inf sentinel
-        # that can never win against any real candidate (d2 finite)
-        structs = []
-        for j in range(width):
-            # (x-cx)*(x-cx), not pow(x, 2): keeps the float result
-            # bit-identical to the SQL oracle and the numpy mirror
-            dx = x - F.col(f"cx{j}")
-            dy = y - F.col(f"cy{j}")
-            d2 = dx * dx + dy * dy
-            structs.append(
-                F.when(
-                    F.col(f"cid{j}").isNotNull(),
-                    F.struct(d2.alias("d2"), F.col(f"cid{j}").alias("center_id")),
-                ).otherwise(
-                    F.struct(
-                        F.lit(float("inf")).alias("d2"),
-                        F.lit(0).cast("long").alias("center_id"),
-                    )
-                )
-            )
-        best = F.least(*structs) if width > 1 else structs[0]
-    else:
-
-        def to_pair(c):
-            # (x-cx)*(x-cx), not pow(x, 2): keeps the float result
-            # bit-identical to the SQL oracle and the numpy mirror
-            dx = x - c["cx"]
-            dy = y - c["cy"]
-            d2 = dx * dx + dy * dy
-            return F.struct(d2.alias("d2"), c["center_id"].alias("center_id"))
-
-        # array_min over structs orders lexicographically by (d2,
-        # center_id) — the same winner rule as min_by over that struct,
-        # and ~20% faster in codegen than an aggregate() When-fold
-        best = F.array_min(F.transform(F.col("cands"), to_pair))
+    structs = []
+    for j in range(width):
+        # (x-cx)*(x-cx), not pow(x, 2): keeps the float result
+        # bit-identical to the SQL oracle and the numpy mirror
+        dx = x - F.col(f"cx{j}")
+        dy = y - F.col(f"cy{j}")
+        d2 = dx * dx + dy * dy
+        s = F.struct(d2.alias("d2"), F.col(f"cid{j}").alias("center_id"))
+        # an empty slot is a null struct, which least() skips; slot 0
+        # is always filled
+        structs.append(s if j == 0 else F.when(F.col(f"cid{j}").isNotNull(), s))
+    best = F.least(*structs) if width > 1 else structs[0]
     keys = [c for c in points.columns]
     return (
         joined.withColumn("__best", best)

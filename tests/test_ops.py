@@ -219,24 +219,191 @@ def test_flagship_end_to_end(spark, scene):
     )
 
 
+def pip_mirror(x, y, cell, polygons, res):
+    """Numpy mirror of pip_join: the polygon cover's cell candidates,
+    interior cells kept outright, boundary cells refined by the
+    ray-crossing ``geom.points_in_polygon``.  Returns sorted (point
+    index, sid) pairs."""
+    cover = ops.polygon_cover_pdf(polygons, res)
+    cand = pd.DataFrame({"i": np.arange(len(x)), "cell": cell}).merge(cover, on="cell")
+    i, sid, full = cand["i"].to_numpy(), cand["sid"].to_numpy(), cand["full"].to_numpy()
+    inside = full.copy()
+    rings = {s: r for s, _name, r in polygons}
+    for s in np.unique(sid[~full]):
+        m = ~full & (sid == s)
+        inside[m] = geom.points_in_polygon(x[i[m]], y[i[m]], rings[s])
+    return sorted(zip(i[inside].tolist(), sid[inside].tolist()))
+
+
+def pip_engine(spark, pts: pd.DataFrame, polygons, res):
+    """pip_join over points given as a pandas frame (i, x, y, cell):
+    sorted (point index, sid) pairs."""
+    got = ops.pip_join(spark.createDataFrame(pts), polygons, res).select("i", "sid").collect()
+    return sorted((int(r.i), int(r.sid)) for r in got)
+
+
 def test_pip_join_sql_equals_pandas_refine(spark, ids, points_df, scene):
     """The codegen segment-parity refine and the numpy ray-crossing
-    refine produce identical join rows."""
-    a = (
-        ops.pip_join(points_df, scene.polygons, 10, refine="sql")
-        .select("image_id", "sid")
-        .toPandas()
-        .sort_values(["image_id", "sid"])
-        .reset_index(drop=True)
+    mirror produce identical join rows."""
+    p = points_df.select("x", "y", "cell").toPandas()
+    p.insert(0, "i", np.arange(len(p)))
+    want = pip_mirror(p["x"].to_numpy(), p["y"].to_numpy(), p["cell"].to_numpy(), scene.polygons, 10)
+    assert pip_engine(spark, p, scene.polygons, 10) == want
+    assert len(want) > N * 0.3
+
+
+def _comb_and_zigzag():
+    """A comb (thin teeth, 9 m pitch) and a zig-zag ring with a hole,
+    placed off every cell-center line, so res-10 cells hold many
+    edges."""
+    x0, y0 = 50_000.3137, 60_000.2718
+    comb = [(x0, y0), (x0 + 600.0, y0), (x0 + 600.0, y0 + 40.3)]
+    for k in range(65, -1, -1):
+        tx = x0 + 9.0 * k + 0.41
+        comb += [(tx + 4.5, y0 + 40.3), (tx + 4.5, y0 + 300.7), (tx, y0 + 300.7), (tx, y0 + 40.3)]
+    comb.append((x0, y0 + 40.3))
+    zx, zy = x0 + 900.17, y0 + 55.29
+    top = [(zx + 7.3 * k, zy + 400.0 + (31.7 if k % 2 else 0.0)) for k in range(80)]
+    zig = [(zx, zy), (zx + 7.3 * 79, zy)] + top[::-1]
+    hx, hy = (zx + 100.3, zx + 300.7), (zy + 100.9, zy + 250.1)
+    hole = [(hx[0], hy[0]), (hx[0], hy[1]), (hx[1], hy[1]), (hx[1], hy[0])]
+    return [
+        (1, "comb", [np.array(comb)]),
+        (2, "zigzag", [np.array(zig), np.array(hole)]),
+    ]
+
+
+def test_pip_join_many_edges_per_cell_matches_mirror(spark):
+    """Cells with several edges (comb teeth, zig-zag) exercise every
+    edge slot of the fixed-width refine; checked against
+    ``geom.points_in_polygon`` over every point."""
+    polys = _comb_and_zigzag()
+    widest = max(
+        max(len(e) for e in geom.cover_cells_with_edges(r, 10)[5]) for _s, _n, r in polys
     )
-    b = (
-        ops.pip_join(points_df, scene.polygons, 10, refine="pandas")
-        .select("image_id", "sid")
-        .toPandas()
-        .sort_values(["image_id", "sid"])
-        .reset_index(drop=True)
+    assert widest >= 4, widest
+    rng = np.random.default_rng(7)
+    x = rng.uniform(49_900.0, 51_700.0, 20_000)
+    y = rng.uniform(59_900.0, 60_600.0, 20_000)
+    c = cells.encode(x, y, 10)
+    pts = pd.DataFrame({"i": np.arange(len(x)), "x": x, "y": y, "cell": c})
+    want = sorted(
+        (int(i), sid) for sid, _n, r in polys for i in np.nonzero(geom.points_in_polygon(x, y, r))[0]
     )
-    pd.testing.assert_frame_equal(a, b)
+    assert {s for _i, s in want} == {1, 2}
+    assert pip_mirror(x, y, c, polys, 10) == want
+    assert pip_engine(spark, pts, polys, 10) == want
+
+
+def knn_brute(x, y, centers: pd.DataFrame, cutoff: float):
+    """Brute-force nearest center: the engine's IEEE operations
+    (x-cx)*(x-cx) + (y-cy)*(y-cy), ties to the lower id.  Returns
+    {point index: (nearest_id, nearest_dist)}."""
+    c = centers.sort_values("center_id", kind="stable")
+    cx, cy = c["cx"].to_numpy(np.float64), c["cy"].to_numpy(np.float64)
+    cid = c["center_id"].to_numpy(np.int64)
+    out = {}
+    for s in range(0, len(x), 512):
+        dx = x[s : s + 512, None] - cx[None, :]
+        dy = y[s : s + 512, None] - cy[None, :]
+        d2 = dx * dx + dy * dy
+        best = np.argmin(d2, axis=1)  # first minimum = lowest id
+        for j, b in enumerate(best):
+            if d2[j, b] <= cutoff**2:
+                out[s + j] = (int(cid[b]), float(np.sqrt(d2[j, b])))
+    return out
+
+
+def knn_engine(spark, x, y, centers, cutoff):
+    pts = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(x)), "x": x, "y": y}))
+    got = ops.knn_assign(pts, centers, cutoff).select("i", "nearest_id", "nearest_dist").collect()
+    return {int(r.i): (int(r.nearest_id), float(r.nearest_dist)) for r in got}
+
+
+def test_knn_assign_hard_inputs_match_bruteforce(spark):
+    """Dense centers (pruned lists wider than the slot bound), coincident
+    centers and exact ties: nearest_id and nearest_dist are bit-exact
+    against brute force, ties going to the lower id."""
+    rng = np.random.default_rng(11)
+    n = 400
+    cx = np.round(rng.uniform(70_000.0, 70_060.0, n), 3)
+    cy = np.round(rng.uniform(30_000.0, 30_060.0, n), 3)
+    cid = rng.permutation(np.arange(10, 10 + 3 * n, 3))
+    # coincident twins: one with a lower id, one with a higher id
+    twin = rng.choice(n, 40, replace=False)
+    tcid = np.where(np.arange(40) % 2 == 0, cid[twin] - 1, cid[twin] + 1)
+    # equidistant pairs (dyadic coordinates: exact distances), the
+    # higher id listed first; and a lone pair far from the dense block
+    a, b, d = 70_200.5, 30_000.25, 12.5
+    pair = [(9_001, a - d, b), (9_000, a + d, b), (9_003, a, b + 2 * d), (9_002, a, b - 2 * d)]
+    centers = pd.DataFrame(
+        {
+            "center_id": np.r_[cid, tcid, [p[0] for p in pair]].astype(np.int64),
+            "cx": np.r_[cx, cx[twin], [p[1] for p in pair]],
+            "cy": np.r_[cy, cy[twin], [p[2] for p in pair]],
+        }
+    )
+    x = np.r_[rng.uniform(69_900.0, 70_300.0, 6000), cx[twin], a, a + 0.5 * d]
+    y = np.r_[rng.uniform(29_900.0, 30_200.0, 6000), cy[twin], b, b + 0.5 * d]
+    # the dense block needs the step to a finer resolution
+    wide = ops._runs(ops._knn_candidates(cid, cx, cy, 70.0, 10, cells.DEFAULT_GRID)[0])[1]
+    assert wide.max() > ops._KNN_MAX_SLOTS
+    want = knn_brute(x, y, centers, 70.0)
+    got = knn_engine(spark, x, y, centers, 70.0)
+    assert got == want
+    # the twins resolve to the lower id, the tie points to 9_000
+    assert got[6000 + 40] == (9_000, d)
+    assert all(got[6000 + k][0] == min(cid[twin[k]], tcid[k]) for k in range(40))
+
+
+def test_knn_assign_unsplittable_cell_matches_bruteforce(spark):
+    """Centers on a circle are all candidates for the cell holding its
+    middle at every resolution, so no resolution within the pair bound
+    fits the slot bound; the wide coarsest layout must stay exact."""
+    n = ops._KNN_MAX_SLOTS + 16
+    a = np.linspace(0.0, 2.0 * np.pi, n, endpoint=False)
+    centers = pd.DataFrame(
+        {"center_id": np.arange(n), "cx": 40_000.3 + 30.0 * np.cos(a), "cy": 40_000.7 + 30.0 * np.sin(a)}
+    )
+    rng = np.random.default_rng(5)
+    x = np.r_[40_000.3, rng.uniform(39_900.0, 40_100.0, 3000)]
+    y = np.r_[40_000.7, rng.uniform(39_900.0, 40_100.0, 3000)]
+    assert knn_engine(spark, x, y, centers, 70.0) == knn_brute(x, y, centers, 70.0)
+
+
+@pytest.mark.parametrize("regime", ["footprints_70m", "clusters_3000m"])
+@pytest.mark.parametrize(
+    "conf",
+    [
+        {"spark.sql.execution.arrow.pyspark.enabled": "true"},
+        {"spark.sql.execution.arrow.pyspark.enabled": "false"},
+        {"spark.sql.execution.pandas.convertToArrowArraySafely": "true"},
+    ],
+)
+def test_knn_assign_padded_cells_any_session_config(spark, scene, conf, regime):
+    """The null-padded candidate slots keep bigint ids and real nulls
+    whatever the session's Arrow settings (a pandas frame padded with
+    None turned ``cid{j}`` into float64 and failed with Arrow off).
+    Both regimes have cells of several widths: the footprint centroids
+    at the reference's 70 m cutoff, and the 48 cluster centers at
+    3000 m."""
+    s = spark.newSession()
+    for k, v in conf.items():
+        s.conf.set(k, v)
+    if regime == "footprints_70m":
+        b = synth.buildings_pdf(scene)
+        centers = pd.DataFrame({"center_id": b["bid"].astype(np.int64), "cx": b["cx"], "cy": b["cy"]})
+        cutoff, spread = 70.0, 90.0
+    else:
+        centers = pd.DataFrame({"center_id": np.arange(len(scene.cx)), "cx": scene.cx, "cy": scene.cy})
+        cutoff, spread = 3000.0, 4000.0
+    rng = np.random.default_rng(3)
+    k = rng.choice(len(centers), 3000)
+    x = centers["cx"].to_numpy()[k] + rng.uniform(-spread, spread, 3000)
+    y = centers["cy"].to_numpy()[k] + rng.uniform(-spread, spread, 3000)
+    got = knn_engine(s, x, y, centers, cutoff)
+    assert got == knn_brute(x, y, centers, cutoff)
+    assert len(got) > 1000
 
 
 def test_hex_ops_match_numpy(spark, ids, points_df):

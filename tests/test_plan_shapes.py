@@ -49,6 +49,22 @@ def test_knn_assign_zero_shuffle(spark):
     assert "Exchange hashpartitioning" not in p, "knn_assign must stay zero-shuffle"
 
 
+def test_point_joins_have_no_interpreted_lambdas(spark):
+    """The PIP and kNN refines are straight-line codegen: no higher-order
+    function (interpreted row by row) in the flagship plan, nor in
+    knn_assign over the scene's footprint centroids at the reference's
+    70 m cutoff, where cells hold dozens of candidates."""
+    import pandas as pd
+
+    assert "lambdafunction" not in plan_text(pipeline.flagship(spark, n_images=2000))
+    b = synth.buildings_pdf(synth.default_scene())
+    centers = pd.DataFrame({"center_id": b["bid"], "cx": b["cx"], "cy": b["cy"]})
+    pts = ops.with_geocode(synth.synth_images_df(spark, 500, 4).select("image_id"))
+    p = plan_text(ops.knn_assign(pts, centers, cutoff=70.0))
+    assert "least(" in p, p
+    assert "lambdafunction" not in p, p
+
+
 def test_density_grid_partial_aggregation(spark):
     pts = ops.with_geocode(synth.synth_images_df(spark, 500, 4).select("image_id"))
     out = ops.density_grid(pts, cell_size=150.0, radius=300.0)

@@ -2,7 +2,10 @@
 __spark_entry__ query against its DuckDB oracle and compare row count,
 schema (column names), and exact values (order-insensitive).
 
-Usage: python tools/check_oracles.py [sf_dir]
+Usage: python tools/check_oracles.py [sf_dir] [gate,gate,...] [--conf key=value ...]
+
+``--conf`` sets a session config for the whole run (repeatable), e.g.
+``--conf spark.sql.execution.arrow.pyspark.enabled=false``.
 """
 
 from __future__ import annotations
@@ -57,14 +60,26 @@ def compare(name: str, got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
     return problems
 
 
+def pop_confs(argv: list[str]) -> dict[str, str]:
+    """Remove every ``--conf KEY=VALUE`` pair from ``argv``; return them."""
+    extra = {}
+    while "--conf" in argv:
+        i = argv.index("--conf")
+        key, value = argv[i + 1].split("=", 1)
+        extra[key] = value
+        del argv[i : i + 2]
+    return extra
+
+
 def main() -> int:
+    extra = pop_confs(sys.argv)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
     import __spark_entry__ as entrymod
     from ib_tool_spark.pipeline import get_spark
 
-    spark = get_spark(app="oracle_check", cores=8, shuffle_partitions=16)
+    spark = get_spark(app="oracle_check", cores=8, shuffle_partitions=16, extra=extra)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
